@@ -43,10 +43,6 @@ def bpeish_tokens(col: str) -> Column:
     return F.regexp_extract_all(F.col(col), F.lit(BPEISH_PATTERN), 0)
 
 
-def token_count(col: str) -> Column:
-    return F.size(ws_tokens(col)).cast("long")
-
-
 # ---------------------------------------------------------------- quality scoring
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")

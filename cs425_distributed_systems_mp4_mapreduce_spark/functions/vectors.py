@@ -25,11 +25,6 @@ NORM2 = (
 )
 
 
-def vec_lit(vec: Sequence[float]) -> Column:
-    """A double array literal (e.g. a broadcast query vector)."""
-    return F.array(*[F.lit(float(x)).cast("double") for x in vec])
-
-
 def dot(a: str, b: str) -> Column:
     return F.expr(DOT.format(a=a, b=b))
 

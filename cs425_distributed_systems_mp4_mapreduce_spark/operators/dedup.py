@@ -529,43 +529,6 @@ def minhash_near_pairs(
     )
 
 
-def minhash_candidate_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    num_tables: int = 16,
-    num_features: int = 1 << 18,
-) -> DataFrame:
-    """The PRE-VERIFICATION candidate set of :func:`minhash_near_pairs`:
-    distinct (id_a < id_b) pairs colliding in ≥1 of the ``num_tables``
-    single-hash LSH tables — exactly the pairs approxSimilarityJoin
-    would go on to verify with an exact Jaccard distance.
-
-    Diagnostic surface: candidate volume (not final output) is what
-    determines shuffle cost at scale, so tests measure THIS across
-    scale factors to demonstrate ~O(N) growth."""
-    from pyspark.ml.functions import vector_to_array
-
-    feat, model = _minhash_model(df, id_col, text_col, shingle_k, num_tables, num_features)
-    hashed = (
-        model.transform(feat)
-        .select("_id", F.posexplode("_hashes").alias("_t", "_h"))
-        .select("_id", "_t", vector_to_array("_h").getItem(0).alias("_hv"))
-    )
-    a, b = hashed.alias("a"), hashed.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a._t") == F.col("b._t"))
-            & (F.col("a._hv") == F.col("b._hv"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
 # --------------------------------------------------------------------------- banded minhash (pure JVM)
 
 

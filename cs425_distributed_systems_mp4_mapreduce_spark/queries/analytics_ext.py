@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.parity import dsum_over
 from ..registry import query
 from ..sources.tables import load_tables, table as T
 
@@ -39,14 +40,7 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("o_orderdate").cast("timestamp").cast("long"))
         .rangeBetween(-2592000, Window.currentRow)
     )
-    return o.select(
-        "o_orderkey",
-        "o_custkey",
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .over(w)
-        .cast("double")
-        .alias("trailing_30d"),
-    )
+    return o.select("o_orderkey", "o_custkey", dsum_over("o_totalprice", w, "trailing_30d"))
 
 
 def _profile_block_sql(col: str, minmax: str) -> str:

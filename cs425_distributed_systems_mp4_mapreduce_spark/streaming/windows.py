@@ -231,7 +231,8 @@ def drain_finite_stateful_stream(q, timeout_s: int = 420) -> None:
     results are complete as soon as one empty batch follows a
     non-empty one: poll ``recentProgress`` for that signature and stop
     the query.  No result rows are lost by stopping (memory-sink
-    commits are synchronous per batch)."""
+    commits are synchronous per batch).  A query that died instead
+    (its function raised) re-raises its error here."""
     import time as _time
 
     deadline = _time.time() + timeout_s
@@ -248,6 +249,9 @@ def drain_finite_stateful_stream(q, timeout_s: int = 420) -> None:
                 f"stateful stream {q.name!r} did not drain within {timeout_s}s"
             )
     q.stop()
+    err = q.exception()
+    if err is not None:
+        raise err
 
 
 def ohlc_stream(

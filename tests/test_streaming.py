@@ -383,6 +383,42 @@ def test_transition_stream_matches_batch(spark, tmp_path):
     assert got.equals(want), (got, want)
 
 
+def test_drain_reraises_when_the_stateful_stream_dies(spark, chunks):
+    """A stateful stream whose function raises dies on its first batch;
+    the drain helper must surface that error at once, not return as if
+    the stream had drained (nor wait out its 420 s timeout)."""
+    import time
+
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def boom(key, pdfs, state):
+        raise RuntimeError("planted stateful failure")
+        yield  # a generator, as applyInPandasWithState requires
+
+    q = (
+        events_stream(spark, chunks)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            boom,
+            outputStructType="user_id long, n long",
+            stateStructType="n long",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        )
+        .writeStream.format("memory")
+        .queryName("dies")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    t0 = time.time()
+    with pytest.raises(StreamingQueryException, match="planted stateful failure"):
+        drain_finite_stateful_stream(q)
+    assert time.time() - t0 < 120
+    assert not q.isActive
+
+
 def test_cdc_upsert_stream_state_equals_batch_twin(spark, chunks, tmp_path):
     """Replay the chunked events stream through the foreachBatch MERGE
     sink (several micro-batches, so the merge path — not just the
